@@ -14,10 +14,15 @@ Parity corners kept deliberately:
 * UNION ALL bag semantics — one transaction can emit up to 4 rows;
 * ``report_dt`` (the reference's ``now()``, report.py:76) is injectable.
 
-Scale: dims broadcast (small by construction); the only shuffle in the whole
-report is the per-card window, which partitions by card_num — high
-cardinality, no skew (a card has few transactions), so it parallelizes
-linearly with executors at 100 TB.
+Scale: dims broadcast (small by construction); every shuffle partitions by
+card_num — high cardinality, no skew (a card has few transactions), so the
+report parallelizes linearly with executors at 100 TB. The reference-shaped
+``build_fraud_report`` plans each UNION ALL branch on its own (rules 3 and 4
+each pay their own lag window). The nightly ``build_fraud_report_incremental``
+evaluates all four rules in one pass over one lag window: its plan has two
+windows (the tails' ``row_number`` and the lags), three shuffles (touched
+cards, tails, lags), and the enrichment chain three times (new rows, touched
+cards, tails) instead of again in every branch.
 """
 
 from __future__ import annotations
@@ -91,7 +96,7 @@ def with_lags(cl: DataFrame) -> DataFrame:
 
 
 def _event(
-    df: DataFrame, event_type: int, report_dt, include_trans_id: bool = False
+    df: DataFrame, event_type: int | F.Column, report_dt, include_trans_id: bool = False
 ) -> DataFrame:
     cols = [
         F.col("trans_date").alias("event_dt"),
@@ -188,8 +193,19 @@ def build_fraud_report_incremental(
     touched cards (time-partitioned facts prune the pre-watermark scan
     to recent partitions only if paired with a max-inactivity policy).
 
-    Equivalence ``incremental ≡ full ⨡ new`` is asserted by
-    ``tests/test_fraud.py`` differentials.
+    The rules are evaluated in ONE pass: the lag columns are computed
+    once over ``tails ∪ new`` with every ``cl`` column kept, and one
+    ``explode`` emits a row per fired rule, so the plan has two windows
+    (tails ``row_number`` and the lags) and the enrichment under each
+    slice is planned once, not once per UNION ALL branch. The output is
+    the same bag as ``build_fraud_report`` restricted to new rows — one
+    row per (transaction, fired rule), a NULL rule counting as not fired
+    — with the same schema, so both paths append to one ``rep_fraud``.
+    The lag columns restate ``with_lags`` on purpose: ``build_fraud_report``
+    stays an independent reference for this assembly.
+
+    Equivalence ``incremental ≡ full ⨡ new`` (as a bag, same schema) and
+    the two-window plan shape are asserted by ``tests/test_fraud.py``.
     """
     wm = F.to_timestamp(F.lit(str(watermark_ts)))
     new = cl.filter(F.col("trans_date") > wm)
@@ -202,5 +218,23 @@ def build_fraud_report_incremental(
         .filter(F.col("__rn") <= 3)
         .drop("__rn")
     )
-    lg = with_lags(tails.unionByName(new)).filter(F.col("trans_date") > wm)
-    return _all_rules(new, lg, report_dt, include_trans_id)
+    w = Window.partitionBy("card_num").orderBy("trans_date")
+    lg = tails.unionByName(new).select(
+        *cl.columns,
+        F.lag("terminal_city").over(w).alias("lag_city"),
+        seconds_between(F.col("trans_date"), F.lag("trans_date").over(w)).alias("lag_pr_sec"),
+        F.lag("oper_result", 1).over(w).alias("res_1"),
+        F.lag("oper_result", 2).over(w).alias("res_2"),
+        F.lag("oper_result", 3).over(w).alias("res_3"),
+        F.lag("amt", 1).over(w).alias("amt_1"),
+        F.lag("amt", 2).over(w).alias("amt_2"),
+        F.lag("amt", 3).over(w).alias("amt_3"),
+        F.lag("trans_date", 3).over(w).alias("dt"),
+    ).filter(F.col("trans_date") > wm)
+    # One row per (row, fired rule): filter keeps index i only where rule
+    # i is TRUE (a NULL rule drops it, as cl.filter(rule) does), and the
+    # literal index array is NULL-free, so event_type stays non-nullable
+    # like the reference's lit(i) branches.
+    rules = F.array(_rule1(), _rule2(), _rule3(), _rule4())
+    fired = F.filter(F.array(*map(F.lit, (1, 2, 3, 4))), lambda i: F.element_at(rules, i))
+    return _event(lg, F.explode(fired), report_dt, include_trans_id)

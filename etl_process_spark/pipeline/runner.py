@@ -21,7 +21,7 @@ import datetime as dt
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from etl_process_spark.operators.scd2 import scd2_init, scd2_merge
@@ -56,6 +56,15 @@ class BatchResult:
     terminal_snapshots: int = 0
     report_rows: int = 0
     details: dict[str, Any] = field(default_factory=dict)
+
+
+def _append_observed(cat: TableCatalog, name: str, df: DataFrame, metric: Column) -> Any:
+    """Append ``df`` to table ``name`` (creating it if absent) and return
+    ``metric``, an aggregate over the written rows observed on the write
+    itself, so the plan runs once instead of once more for a count."""
+    obs = Observation()
+    cat.append(name, df.observe(obs, metric.alias("metric")))
+    return obs.get["metric"]
 
 
 def run_daily_batch(
@@ -93,11 +102,9 @@ def run_daily_batch(
         new_rows = clean if fact is None else clean.join(
             fact.select("trans_id"), on="trans_id", how="left_anti"
         )
-        n_new = new_rows.count()
-        if n_new:
-            batch_min = new_rows.agg(F.min("trans_date")).first()[0]
-            if batch_min is not None and (min_new_ts is None or batch_min < min_new_ts):
-                min_new_ts = batch_min
+        n_new, batch_min = new_rows.agg(F.count(F.lit(1)), F.min("trans_date")).first()
+        if batch_min is not None and (min_new_ts is None or batch_min < min_new_ts):
+            min_new_ts = batch_min
         n_rej = rejects.count()
         if fact is None:
             cat.overwrite("fact_transactions", new_rows)
@@ -121,13 +128,11 @@ def run_daily_batch(
     last = wm.get("blacklist", "1899-01-01")
     for fdate, path in bl_inbox.discover(after=dt.date.fromisoformat(last[:10])):
         bl = cat.read("fact_blacklist") if cat.exists("fact_blacklist") else None
-        new_rows = load_blacklist_file(spark, path, bl)
-        if bl is None:
-            cat.overwrite("fact_blacklist", new_rows)
-        else:
-            cat.append("fact_blacklist", new_rows)
+        res.blacklist_appended += _append_observed(
+            cat, "fact_blacklist", load_blacklist_file(spark, path, bl),
+            F.count(F.lit(1)),
+        )
         res.blacklist_files += 1
-        res.blacklist_appended += new_rows.count()
         wm.set("blacklist", str(fdate))
         if archive:
             bl_inbox.archive(path)
@@ -160,11 +165,12 @@ def run_daily_batch(
 
     # --- data-quality gate: declarative expectations on the fact ----------
     # The reference's only check is a row-count print; the engine writes a
-    # per-run violations report (one scan + one key shuffle, expectations.py).
-    if cat.exists("fact_transactions"):
+    # per-run violations report (one scan + one key shuffle, expectations.py);
+    # this run's violations are observed on its write, not read back.
+    fact = cat.read("fact_transactions") if cat.exists("fact_transactions") else None
+    if fact is not None:
         from etl_process_spark.pipeline import expectations as ex
 
-        fact = cat.read("fact_transactions")
         dq = ex.check_expectations(
             fact,
             [
@@ -174,71 +180,75 @@ def run_daily_batch(
                 ex.unique("trans_id"),
             ],
         ).withColumn("run_clock", F.lit(str(clock)))
-        if cat.exists("dq_report"):
-            cat.append("dq_report", dq)
-        else:
-            cat.overwrite("dq_report", dq)
-        res.details["dq_violations"] = {
-            r["rule"]: r["n_violations"] for r in cat.read("dq_report")
-            .filter(F.col("run_clock") == str(clock)).collect()
-        }
+        res.details["dq_violations"] = _append_observed(
+            cat, "dq_report", dq,
+            F.map_from_entries(F.collect_list(F.struct("rule", "n_violations"))),
+        )
 
     # --- report: enrichment join chain + 4 rules, append-only -------------
     # Incremental contract: after the first full build, each run derives
     # events only for trans_date beyond the report watermark (new rows ∪
-    # 3-row per-card tails — build_fraud_report_incremental), so nightly
-    # cost tracks NEW data, not all-time history. Late-arriving facts
-    # below the watermark pull the effective watermark back to just
-    # before the earliest new row, so their events are still derived; the
-    # dedup anti-join (bounded to the same lookback window — rep_fraud is
-    # never scanned past it) absorbs the overlap. The dedup key is
-    # (trans_id, event_type): NULL-free (passport can be NULL through the
-    # LEFT-join chain and a NULL key never matches an anti-join) and
-    # collision-free for same-second events. A retroactive dimension
-    # rewrite that changes OLD transactions' enrichment needs an explicit
-    # rebuild (clear the 'report' watermark + rep_fraud) — same as any
-    # watermark-incremental pipeline.
-    if cat.exists("fact_transactions") and cat.exists("dim_terminals_hist"):
-        blacklist = (
-            cat.read("fact_blacklist")
-            if cat.exists("fact_blacklist")
-            else dims["blacklist"]
-        )
-        fact = cat.read("fact_transactions")
-        cl = enrich_transactions(
-            fact,
-            cat.read("dim_terminals_hist"),
-            dims["cards"], dims["accounts"], dims["clients"],
-            blacklist,
-        )
+    # 3-row per-card tails — build_fraud_report_incremental, all four
+    # rules in one pass), so nightly cost tracks NEW data, not all-time
+    # history. Late-arriving facts below the watermark pull the effective
+    # watermark back to just before the earliest new row, so their events
+    # are still derived; the dedup anti-join (bounded to the same lookback
+    # window — rep_fraud is never scanned past it) absorbs the overlap.
+    # The dedup key is (trans_id, event_type): NULL-free (passport can be
+    # NULL through the LEFT-join chain and a NULL key never matches an
+    # anti-join) and collision-free for same-second events. A retroactive
+    # dimension rewrite that changes OLD transactions' enrichment needs an
+    # explicit rebuild (clear the 'report' watermark + rep_fraud) — same as
+    # any watermark-incremental pipeline.
+    #
+    # The report plan runs exactly once: report_rows is observed on the
+    # rep_fraud write, not counted by a separate action. An append writes
+    # a part file even when empty, so once rep_fraud exists a run that
+    # appended no facts and has none past the report watermark skips the
+    # build altogether; facts past it with none appended this run are left
+    # by a run that failed before rep_fraud committed, which is why the
+    # watermark advances only after the write.
+    if fact is not None and cat.exists("dim_terminals_hist"):
         stored_wm = wm.get("report", "")
-        if not stored_wm:
-            report = build_fraud_report(cl, clock, include_trans_id=True)
-            eff_wm = None
-        else:
-            eff_wm = stored_wm
-            if min_new_ts is not None and str(min_new_ts) <= stored_wm:
-                eff_wm = str(min_new_ts - dt.timedelta(seconds=1))
-            report = build_fraud_report_incremental(
-                cl, eff_wm, clock, include_trans_id=True
+        pending = res.transactions_appended > 0 or not cat.exists("rep_fraud")
+        if not pending:
+            fact_max = fact.agg(F.max("trans_date")).first()[0]
+            pending = fact_max is not None and str(fact_max) > stored_wm
+        if pending:
+            blacklist = (
+                cat.read("fact_blacklist")
+                if cat.exists("fact_blacklist")
+                else dims["blacklist"]
             )
-        if cat.exists("rep_fraud"):
-            prior = cat.read("rep_fraud")
-            if eff_wm is not None:
-                prior = prior.filter(
-                    F.col("event_dt") > F.to_timestamp(F.lit(eff_wm))
+            cl = enrich_transactions(
+                fact,
+                cat.read("dim_terminals_hist"),
+                dims["cards"], dims["accounts"], dims["clients"],
+                blacklist,
+            )
+            if not stored_wm:
+                report = build_fraud_report(cl, clock, include_trans_id=True)
+                eff_wm = None
+            else:
+                eff_wm = stored_wm
+                if min_new_ts is not None and str(min_new_ts) <= stored_wm:
+                    eff_wm = str(min_new_ts - dt.timedelta(seconds=1))
+                report = build_fraud_report_incremental(
+                    cl, eff_wm, clock, include_trans_id=True
                 )
-            report = report.join(
-                prior.select("trans_id", "event_type"),
-                on=["trans_id", "event_type"], how="left_anti",
+            if cat.exists("rep_fraud"):
+                prior = cat.read("rep_fraud")
+                if eff_wm is not None:
+                    prior = prior.filter(
+                        F.col("event_dt") > F.to_timestamp(F.lit(eff_wm))
+                    )
+                report = report.join(
+                    prior.select("trans_id", "event_type"),
+                    on=["trans_id", "event_type"], how="left_anti",
+                )
+            res.report_rows = _append_observed(
+                cat, "rep_fraud", report, F.count(F.lit(1))
             )
-            n = report.count()
-            if n:
-                cat.append("rep_fraud", report)
-        else:
-            n = report.count()
-            cat.overwrite("rep_fraud", report)
-        res.report_rows = n
-        wm.advance_from("report", fact, "trans_date")
+            wm.advance_from("report", fact, "trans_date")
 
     return res

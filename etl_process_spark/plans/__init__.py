@@ -21,4 +21,5 @@ from etl_process_spark.plans.audit import (  # noqa: F401
     read_schemas,
     sortmerge_join_count,
     unbounded_serial_exchanges,
+    window_count,
 )

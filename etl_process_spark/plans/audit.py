@@ -79,6 +79,12 @@ def sortmerge_join_count(df: DataFrame) -> int:
     return _count_nodes(explain_str(df), "SortMergeJoin")
 
 
+def window_count(df: DataFrame) -> int:
+    """Number of Window operators (each sorts and scans its partitions);
+    the WindowGroupLimit pre-filters of a top-k window are not counted."""
+    return _count_nodes(explain_str(df), "Window$")
+
+
 def has_cartesian(df: DataFrame) -> bool:
     """True if the plan contains an unconstrained product (CartesianProduct
     or a non-broadcast nested loop) — almost always a scale bug."""

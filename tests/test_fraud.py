@@ -5,6 +5,7 @@ Each rule fires on exactly one planted transaction; near-miss rows
 at exactly >1h, only 2 REJECTs, non-decreasing amounts."""
 
 import datetime as dt
+from collections import Counter
 from decimal import Decimal
 
 import pytest
@@ -128,7 +129,7 @@ def test_asof_boundary_strict(report):
 def synthetic_cl(spark):
     """A few hundred pre-enriched rows (the cl CTE's schema) with every
     rule firing somewhere, deterministic via a fixed seed and unique
-    per-card timestamps."""
+    per-card timestamps, plus one planted rule-4 sequence."""
     import random
 
     rng = random.Random(42)
@@ -154,6 +155,16 @@ def synthetic_cl(spark):
                 dt.date(2021, 1, 1) if blacklisted else INF_D,
                 rng.choice(["Moscow", "Kazan", "Tver"]),
             ))
+    # rule 4 across the 18:00 watermark the differentials use: the three
+    # REJECTs are history (3-row tail), the SUCCESS is new
+    for i, (minute, amt, result) in enumerate(
+        [(50, 400, "REJECT"), (55, 300, "REJECT"), (58, 200, "REJECT"), (65, 100, "SUCCESS")]
+    ):
+        rows.append((
+            f"txR4_{i}", D(2021, 3, 1, 17, 0, 0) + dt.timedelta(minutes=minute),
+            "CARDR4", "WITHDRAW", Decimal(amt), result, "T1", INF_D,
+            "Person R4", "PR4", INF_D, "+70000000099", None, INF_D, "Moscow",
+        ))
     return spark.createDataFrame(
         rows,
         "trans_id string, trans_date timestamp, card_num string, oper_type string, "
@@ -169,16 +180,68 @@ def _events(df):
     )
 
 
+def _event_bag(df):
+    """The report as a multiset: UNION ALL multiplicity counts."""
+    return Counter(
+        (r["trans_id"], r["event_type"], r["event_dt"], r["passport"])
+        for r in df.collect()
+    )
+
+
+def _assert_incremental_matches_full(cl, wm):
+    """The incremental report equals the full report restricted to rows
+    after ``wm``, as a bag and with the identical schema (both paths
+    append to one rep_fraud table). Returns the bag."""
+    from etl_process_spark.pipeline.fraud import build_fraud_report_incremental
+
+    full_new = build_fraud_report(cl, REPORT_DT, include_trans_id=True).filter(
+        F.col("event_dt") > F.lit(wm)
+    )
+    inc = build_fraud_report_incremental(cl, wm, REPORT_DT, include_trans_id=True)
+    assert inc.schema == full_new.schema
+    bag = _event_bag(inc)
+    assert bag == _event_bag(full_new)
+    assert set(k[1] for k in bag) == {1, 2, 3, 4}  # not vacuous: every rule fires
+    return bag
+
+
 def test_incremental_report_matches_full_restricted_to_new(synthetic_cl):
     from etl_process_spark.pipeline.fraud import build_fraud_report_incremental
 
     wm = D(2021, 3, 1, 18, 0, 0)
+    _assert_incremental_matches_full(synthetic_cl, wm)
+    # the default (reference-parity) shape agrees too
     full_new = build_fraud_report(synthetic_cl, REPORT_DT).filter(
         F.col("event_dt") > F.lit(wm)
     )
     inc = build_fraud_report_incremental(synthetic_cl, wm, REPORT_DT)
+    assert inc.schema == full_new.schema
     assert _events(inc) == _events(full_new)
-    assert len(_events(inc)) > 0  # the comparison is not vacuous
+
+
+def test_incremental_report_keeps_union_all_multiplicity(synthetic_cl):
+    """Duplicate cl rows — what duplicate dimension versions produce,
+    since the reference joins full histories "duplicates and all" — must
+    emit one event per copy and fired rule, on both sides of the
+    watermark (the duplicates also land in the 3-row tails)."""
+    dup = synthetic_cl.unionByName(
+        synthetic_cl.filter(F.col("card_num").isin(*[f"CARD{c}" for c in range(10)]))
+    )
+    bag = _assert_incremental_matches_full(dup, D(2021, 3, 1, 18, 0, 0))
+    assert max(bag.values()) > 1  # the multiplicity is exercised
+
+
+def test_incremental_report_evaluates_rules_in_one_pass(synthetic_cl):
+    """Plan-shape guard: two Window operators — the tails' row_number and
+    the one lag window all four rules read. The branch-per-rule shape
+    plans a tails window and a lag window per window rule (4)."""
+    from etl_process_spark.pipeline.fraud import build_fraud_report_incremental
+    from etl_process_spark.plans.audit import window_count
+
+    inc = build_fraud_report_incremental(
+        synthetic_cl, D(2021, 3, 1, 18, 0, 0), REPORT_DT, include_trans_id=True
+    )
+    assert window_count(inc) == 2
 
 
 def test_incremental_report_composes_across_two_advances(synthetic_cl):

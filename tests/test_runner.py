@@ -5,6 +5,7 @@ SCD2 no-op — the reference's idempotency mechanisms, composed)."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -75,6 +76,16 @@ def _write_day2(inbox):
     )
 
 
+def _table_files(wh, table):
+    """Every file of ``table`` under warehouse ``wh``: its pointer and the
+    contents of each of its version directories."""
+    paths = (
+        os.path.relpath(os.path.join(d, f), wh)
+        for d, _, files in os.walk(wh) for f in files
+    )
+    return sorted(p for p in paths if p.startswith((f"{table}_", f"{table}.version.json")))
+
+
 def test_two_day_run_then_idempotent_rerun(spark, dims, tmp_path):
     inbox = tmp_path / "inbox"
     inbox.mkdir()
@@ -119,6 +130,9 @@ def test_two_day_run_then_idempotent_rerun(spark, dims, tmp_path):
 
     # --- re-run with no new inputs: everything is a no-op -----------------
     before = sorted(map(tuple, rep.collect()))
+    # dq_report is appended on every run by design
+    tables = ["rep_fraud", "fact_transactions", "quarantine_transactions"]
+    files_before = {t: _table_files(wh, t) for t in tables}
     r3 = run_daily_batch(
         spark, inbox_dir=str(inbox), warehouse_dir=wh, dims=dims,
         clock=CLOCK + dt.timedelta(days=1), archive=False,
@@ -129,6 +143,9 @@ def test_two_day_run_then_idempotent_rerun(spark, dims, tmp_path):
     assert r3.report_rows == 0
     assert sorted(map(tuple, cat.read("rep_fraud").collect())) == before
     assert cat.read("fact_transactions").count() == 4
+    # not even an empty part file was written
+    assert {t: _table_files(wh, t) for t in tables} == files_before
+    assert all(files_before.values())
 
     # the DQ gate ran each time over the clean fact: zero violations,
     # 4 rows checked (the quarantined row never reached the warehouse)
@@ -243,3 +260,98 @@ def test_late_arriving_fact_still_reported(spark, dims, tmp_path):
         clock=CLOCK + dt.timedelta(days=2), archive=False,
     )
     assert r3.report_rows == 0
+
+
+def test_blacklist_appended_counts_the_written_rows(spark, dims, tmp_path):
+    """blacklist_appended is the number of rows the append wrote: a
+    day-2 file with one known and one new passport appends 1, and the
+    same file re-sent under a later date appends 0."""
+    inbox = tmp_path / "inbox"
+    inbox.mkdir()
+    wh = str(tmp_path / "wh")
+
+    def run(day):
+        return run_daily_batch(
+            spark, inbox_dir=str(inbox), warehouse_dir=wh, dims=dims,
+            clock=dt.datetime(2024, 3, day, 1, 17), archive=False,
+        )
+
+    (inbox / "passport_blacklist_01032024.xlsx.csv").write_text(
+        "date;passport\n2024-02-01;P999\n"
+    )
+    assert run(2).blacklist_appended == 1
+    day2 = "date;passport\n2024-02-01;P999\n2024-03-01;P111\n"
+    (inbox / "passport_blacklist_02032024.xlsx.csv").write_text(day2)
+    r2 = run(3)
+    assert (r2.blacklist_files, r2.blacklist_appended) == (1, 1)
+    (inbox / "passport_blacklist_03032024.xlsx.csv").write_text(day2)
+    r3 = run(4)
+    assert (r3.blacklist_files, r3.blacklist_appended) == (1, 0)
+    bl = TableCatalog(spark, wh).read("fact_blacklist")
+    assert sorted(r["passport_num"] for r in bl.collect()) == ["P111", "P999"]
+
+
+def test_report_catches_up_after_a_failed_report_stage(spark, dims, tmp_path, monkeypatch):
+    """A run that commits facts but fails before rep_fraud commits leaves
+    the report watermark behind; the next run, with no new input, must
+    still derive those facts' events (the skip rule for no-input runs
+    looks at the fact, not only at this run's appends)."""
+    from etl_process_spark.pipeline import runner
+
+    inbox = tmp_path / "inbox"
+    inbox.mkdir()
+    wh = str(tmp_path / "wh")
+    _write_day1(inbox)
+    run_daily_batch(
+        spark, inbox_dir=str(inbox), warehouse_dir=wh, dims=dims,
+        clock=dt.datetime(2024, 3, 2, 1, 17), archive=False,
+    )
+    _write_day2(inbox)
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("report stage down")
+
+    with monkeypatch.context() as m:
+        m.setattr(runner, "build_fraud_report_incremental", crash)
+        with pytest.raises(RuntimeError, match="report stage down"):
+            run_daily_batch(
+                spark, inbox_dir=str(inbox), warehouse_dir=wh, dims=dims,
+                clock=CLOCK, archive=False,
+            )
+    r = run_daily_batch(
+        spark, inbox_dir=str(inbox), warehouse_dir=wh, dims=dims,
+        clock=CLOCK + dt.timedelta(days=1), archive=False,
+    )
+    assert r.transactions_appended == 0
+    assert r.report_rows == 1  # the T005 city hop
+    rep = TableCatalog(spark, wh).read("rep_fraud")
+    assert sorted((x["trans_id"], x["event_type"]) for x in rep.collect()) == [
+        ("T002", 1),  # day 1: expired passport
+        ("T005", 3),
+    ]
+
+
+def test_empty_fact_rerun_writes_no_report_files(spark, dims, tmp_path):
+    """A first night whose every row is quarantined leaves an empty fact
+    and no report watermark; a no-input re-run must not append an empty
+    part file to rep_fraud."""
+    inbox = tmp_path / "inbox"
+    inbox.mkdir()
+    wh = str(tmp_path / "wh")
+    (inbox / "transactions_01032024.txt").write_text(
+        TX_HEADER + "T301;BROKEN-DATE;10,00;CARD1               ;PAYMENT;SUCCESS;A1\n"
+    )
+    (inbox / "terminals_01032024.csv").write_text(
+        "terminal_id,terminal_type,terminal_city,terminal_address\nA1,POS,Moscow,addr1\n"
+    )
+
+    def run(day):
+        return run_daily_batch(
+            spark, inbox_dir=str(inbox), warehouse_dir=wh, dims=dims,
+            clock=dt.datetime(2024, 3, day, 1, 17), archive=False,
+        )
+
+    assert run(2).report_rows == 0
+    files = _table_files(wh, "rep_fraud")
+    assert run(3).report_rows == 0
+    assert files and _table_files(wh, "rep_fraud") == files
