@@ -4,9 +4,11 @@ report, run nightly by cron).
 
 Where the reference runs 8 scripts as subprocesses, each opening its own DB
 connections, this is ONE driver function over ONE SparkSession: every stage
-is a function call sharing DataFrames and a ``TableCatalog`` warehouse, with
-a per-stage atomic pointer-swap write as the commit boundary (the analog of
-each script's ``conn.commit()``). Ordering is load-bearing exactly as in the
+is a function call sharing DataFrames and a ``TableCatalog`` warehouse.
+Every write, appends included, is one atomic catalog commit (a new version
+directory plus one pointer swap), the analog of each script's
+``conn.commit()``: a stage that fails mid-write leaves the table as the
+previous commit left it. Ordering is load-bearing exactly as in the
 reference: facts and dimensions must be current before the report joins them.
 
 Idempotency comes from the same three mechanisms the reference uses:
@@ -58,13 +60,15 @@ class BatchResult:
     details: dict[str, Any] = field(default_factory=dict)
 
 
-def _append_observed(cat: TableCatalog, name: str, df: DataFrame, metric: Column) -> Any:
-    """Append ``df`` to table ``name`` (creating it if absent) and return
-    ``metric``, an aggregate over the written rows observed on the write
-    itself, so the plan runs once instead of once more for a count."""
+def _append_observed(
+    cat: TableCatalog, name: str, df: DataFrame, metric: Column
+) -> tuple[int, Any]:
+    """Append ``df`` to table ``name`` and return the rows committed and
+    ``metric``, an aggregate over the written rows, both observed on the
+    write itself, so the plan runs once instead of once more for them."""
     obs = Observation()
-    cat.append(name, df.observe(obs, metric.alias("metric")))
-    return obs.get["metric"]
+    rows = cat.append(name, df.observe(obs, metric.alias("metric")))
+    return rows, obs.get["metric"]
 
 
 def run_daily_batch(
@@ -102,20 +106,17 @@ def run_daily_batch(
         new_rows = clean if fact is None else clean.join(
             fact.select("trans_id"), on="trans_id", how="left_anti"
         )
-        n_new, batch_min = new_rows.agg(F.count(F.lit(1)), F.min("trans_date")).first()
+        n_new, batch_min = _append_observed(
+            cat, "fact_transactions", new_rows, F.min("trans_date")
+        )
         if batch_min is not None and (min_new_ts is None or batch_min < min_new_ts):
             min_new_ts = batch_min
         n_rej = rejects.count()
-        if fact is None:
-            cat.overwrite("fact_transactions", new_rows)
-        elif n_new:
-            cat.append("fact_transactions", new_rows)
         if n_rej:
-            stamped = rejects.withColumn("load_date", F.lit(str(fdate)))
-            if cat.exists("quarantine_transactions"):
-                cat.append("quarantine_transactions", stamped)
-            else:
-                cat.overwrite("quarantine_transactions", stamped)
+            cat.append(
+                "quarantine_transactions",
+                rejects.withColumn("load_date", F.lit(str(fdate))),
+            )
         res.transactions_files += 1
         res.transactions_appended += n_new
         res.transactions_quarantined += n_rej
@@ -128,9 +129,8 @@ def run_daily_batch(
     last = wm.get("blacklist", "1899-01-01")
     for fdate, path in bl_inbox.discover(after=dt.date.fromisoformat(last[:10])):
         bl = cat.read("fact_blacklist") if cat.exists("fact_blacklist") else None
-        res.blacklist_appended += _append_observed(
-            cat, "fact_blacklist", load_blacklist_file(spark, path, bl),
-            F.count(F.lit(1)),
+        res.blacklist_appended += cat.append(
+            "fact_blacklist", load_blacklist_file(spark, path, bl)
         )
         res.blacklist_files += 1
         wm.set("blacklist", str(fdate))
@@ -180,7 +180,7 @@ def run_daily_batch(
                 ex.unique("trans_id"),
             ],
         ).withColumn("run_clock", F.lit(str(clock)))
-        res.details["dq_violations"] = _append_observed(
+        _, res.details["dq_violations"] = _append_observed(
             cat, "dq_report", dq,
             F.map_from_entries(F.collect_list(F.struct("rule", "n_violations"))),
         )
@@ -201,13 +201,13 @@ def run_daily_batch(
     # explicit rebuild (clear the 'report' watermark + rep_fraud) — same as
     # any watermark-incremental pipeline.
     #
-    # The report plan runs exactly once: report_rows is observed on the
-    # rep_fraud write, not counted by a separate action. An append writes
-    # a part file even when empty, so once rep_fraud exists a run that
-    # appended no facts and has none past the report watermark skips the
-    # build altogether; facts past it with none appended this run are left
-    # by a run that failed before rep_fraud committed, which is why the
-    # watermark advances only after the write.
+    # The report plan runs exactly once: report_rows is what the rep_fraud
+    # append committed, observed on the write; an empty append commits
+    # nothing. Once rep_fraud exists, a run that appended no facts and has
+    # none past the report watermark skips the build altogether; facts
+    # past it with none appended this run are left by a run that failed
+    # before rep_fraud committed, which is why the watermark advances only
+    # after the write.
     if fact is not None and cat.exists("dim_terminals_hist"):
         stored_wm = wm.get("report", "")
         pending = res.transactions_appended > 0 or not cat.exists("rep_fraud")
@@ -246,9 +246,7 @@ def run_daily_batch(
                     prior.select("trans_id", "event_type"),
                     on=["trans_id", "event_type"], how="left_anti",
                 )
-            res.report_rows = _append_observed(
-                cat, "rep_fraud", report, F.count(F.lit(1))
-            )
+            res.report_rows = cat.append("rep_fraud", report)
             wm.advance_from("report", fact, "trans_date")
 
     return res

@@ -1,23 +1,66 @@
 """Warehouse table catalog — parquet-backed named tables.
 
-The reference's warehouse is 16 Postgres tables (main.ddl:1-137). Here each
-table is a parquet directory under a root, read/written through one catalog
-object so every stage shares the same paths and write discipline.
+The reference's warehouse is 16 Postgres tables (main.ddl:1-137), and each
+nightly step commits as one transaction (transaction.py:113). Here each
+table is a set of immutable parquet directories under a root, and every
+write goes through ONE commit protocol (SURVEY §7 "hard parts" (a)):
 
-Write discipline (SURVEY §7 "hard parts" (a)): Spark cannot atomically
-overwrite a directory it is concurrently reading (it would truncate its own
-input). ``overwrite`` therefore writes to a fresh versioned directory and
-flips a pointer file — write-temp-then-swap — which also gives readers
-snapshot isolation between runs, the parity analog of the reference's
-per-script transactional commit (transaction.py:113).
+1. write the frame into a fresh ``{name}_v{N}`` directory, numbered
+   above every existing one, so no committed directory is written again;
+2. swap ``{name}.version.json`` to the version's manifest with one
+   ``os.replace``. The manifest holds ``version``, ``dirs`` (the live
+   directories, absolute paths) and ``txns`` (writer id -> the last
+   sequence number that writer committed).
+
+``overwrite``/``write_partitioned``/``write_sorted``/``compact`` make
+``dirs == [new]``; ``append`` makes ``dirs == old + [new]``. A crash before
+the swap leaves the old manifest live and the new directory an
+unreferenced orphan that ``vacuum`` removes; readers never see a partial
+write, appends included. ``append(txn=(writer, seq))`` is a no-op when the
+writer already committed ``seq`` (Delta Lake's ``txnAppId``/``txnVersion``
+idempotency), which is how a replayed streaming epoch stays exactly-once;
+``txns`` survive every later commit, rewrites and compactions included.
+
+Each superseded manifest is kept as ``_manifest.json`` inside its own
+version directory (Spark's reader skips ``_``-prefixed files), written by
+the next commit just before its swap, so only committed versions ever get
+one. ``versions``/``read_version`` are therefore time travel per commit,
+and ``vacuum`` keeps exactly what the newest manifests reference.
+
+Storage contract: one writer per table at a time, and an atomic POSIX
+``os.replace`` of the pointer file. An object store has no atomic rename;
+there the swap must become a conditional put (put-if-absent of the next
+manifest), as Delta's log does.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
+import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+
+MANIFEST = "_manifest.json"
+
+
+def _write_json(path: str, payload: dict) -> None:
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump(payload, fh)
+    os.replace(tmp, path)
+
+
+def _parquet_files(dirs: list[str]) -> list[str]:
+    return [
+        os.path.join(dirpath, f)
+        for d in dirs
+        for dirpath, _, files in os.walk(d)
+        for f in files
+        if f.endswith(".parquet")
+    ]
 
 
 class TableCatalog:
@@ -29,6 +72,9 @@ class TableCatalog:
     def _pointer(self, name: str) -> str:
         return os.path.join(self.root, f"{name}.version.json")
 
+    def _dir(self, name: str, version: int) -> str:
+        return os.path.join(self.root, f"{name}_v{version}")
+
     def _read_pointer(self, name: str) -> dict | None:
         ptr = self._pointer(name)
         if not os.path.exists(ptr):
@@ -36,28 +82,60 @@ class TableCatalog:
         with open(ptr) as fh:
             return json.load(fh)
 
-    def _write_pointer(self, name: str, payload: dict) -> None:
-        tmp = self._pointer(name) + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(payload, fh)
-        os.replace(tmp, self._pointer(name))
+    def _write_pointer(self, name: str, manifest: dict) -> None:
+        _write_json(self._pointer(name), manifest)
 
     def _current_dirs(self, name: str) -> list[str] | None:
         p = self._read_pointer(name)
-        if p is None:
-            return None
-        return p["dirs"] if "dirs" in p else [p["dir"]]
+        return None if p is None else p["dirs"]
 
-    def _current_dir(self, name: str) -> str | None:
-        ds = self._current_dirs(name)
-        if ds is None:
-            return None
-        if len(ds) != 1:
-            raise ValueError(
-                f"table {name} is a segment log ({len(ds)} segments); "
-                "compact it before using single-directory operations"
-            )
-        return ds[0]
+    def _version_dirs(self, name: str) -> dict[int, str]:
+        """Every ``{name}_v{N}`` directory, committed or orphaned."""
+        pat = re.compile(rf"^{re.escape(name)}_v(\d+)$")
+        return {
+            int(m.group(1)): os.path.join(self.root, d)
+            for d in os.listdir(self.root)
+            if (m := pat.match(d)) and os.path.isdir(os.path.join(self.root, d))
+        }
+
+    def _commit(
+        self,
+        name: str,
+        df: DataFrame,
+        append: bool = False,
+        txn: tuple[str, int] | None = None,
+        partition_cols: list[str] | None = None,
+    ) -> int:
+        """The one write path: ``df`` into a fresh version directory, then
+        one pointer swap. Returns the rows committed, observed on the write.
+
+        An append of 0 rows to an existing table commits nothing and
+        deletes its empty directory; so does an append whose ``txn`` the
+        writer already committed, without writing at all.
+        """
+        old = self._read_pointer(name)
+        txns = dict(old["txns"]) if old else {}
+        if txn is not None:
+            writer, seq = txn
+            if seq <= txns.get(writer, -1):
+                return 0
+            txns[writer] = seq
+        kept = old["dirs"] if append and old else []
+        version = max(self._version_dirs(name), default=-1) + 1
+        new_dir = self._dir(name, version)
+        obs = Observation()
+        out = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite")
+        if partition_cols:
+            out = out.partitionBy(*partition_cols)
+        out.parquet(new_dir)
+        rows = obs.get["rows"]
+        if kept and not rows:
+            shutil.rmtree(new_dir)
+            return 0
+        if old:
+            _write_json(os.path.join(self._dir(name, old["version"]), MANIFEST), old)
+        self._write_pointer(name, {"version": version, "dirs": kept + [new_dir], "txns": txns})
+        return rows
 
     def exists(self, name: str) -> bool:
         return self._current_dirs(name) is not None
@@ -68,79 +146,18 @@ class TableCatalog:
             raise FileNotFoundError(f"table {name} not initialized under {self.root}")
         return self.spark.read.parquet(*ds)
 
-    def _next_version(self, name: str) -> int:
-        vs = self.versions(name)
-        return (vs[-1] + 1) if vs else 0
+    def overwrite(self, name: str, df: DataFrame) -> int:
+        """Atomic table rewrite (readers see the old or the new rows);
+        returns the rows committed."""
+        return self._commit(name, df)
 
-    def overwrite(self, name: str, df: DataFrame) -> None:
-        """Atomic table rewrite: write new version dir, then flip pointer.
-
-        If the table was a segment log, the rewrite consolidates it back
-        to one directory; committed segment ids stay acknowledged via
-        ``compacted_through`` so ``has_segment`` (the streaming replay
-        guard) still reports them as applied.
+    def append(self, name: str, df: DataFrame, txn: tuple[str, int] | None = None) -> int:
+        """Append sink (reference S8, INSERT...SELECT): commits ``df`` as one
+        more live directory, creating the table on first use, and returns
+        the rows committed. ``txn=(writer, seq)`` makes the append
+        idempotent: it is a no-op once ``writer`` has committed ``seq``.
         """
-        old = self._read_pointer(name) or {}
-        new_dir = os.path.join(self.root, f"{name}_v{self._next_version(name)}")
-        df.write.mode("overwrite").parquet(new_dir)
-        payload: dict = {"dir": new_dir}
-        seg_ids = [int(s) for s in old.get("segments", {})]
-        thru = max([old.get("compacted_through", -1), *seg_ids] or [-1])
-        if thru >= 0:
-            payload["compacted_through"] = thru
-        self._write_pointer(name, payload)
-
-    def append_segment(self, name: str, df: DataFrame, segment_id: int) -> None:
-        """Append-only log write: persist ``df`` as segment ``segment_id``
-        and commit it with one atomic pointer swap — O(segment) bytes
-        written per call instead of ``overwrite``'s O(table) rewrite.
-
-        Idempotent per segment id: a replayed (crashed-and-rerun) epoch
-        rewrites the same segment directory with the same deterministic
-        content and re-commits the same pointer, so a crash at any step
-        leaves either the old pointer (orphan dir, rewritten on replay)
-        or the new one (segment fully visible). Readers see the union of
-        all committed segments through ``read``. Periodic ``compact``
-        (or ``overwrite``) folds the log back to one directory.
-        """
-        old = self._read_pointer(name)
-        seg_dir = os.path.join(self.root, f"{name}_seg{int(segment_id):08d}")
-        df.write.mode("overwrite").parquet(seg_dir)
-        if old is None:
-            payload: dict = {"dirs": [seg_dir], "segments": {str(int(segment_id)): seg_dir}}
-        else:
-            dirs = old["dirs"] if "dirs" in old else [old["dir"]]
-            segments = dict(old.get("segments", {}))
-            segments[str(int(segment_id))] = seg_dir
-            if seg_dir not in dirs:
-                dirs = dirs + [seg_dir]
-            payload = {"dirs": dirs, "segments": segments}
-            if "compacted_through" in old:
-                payload["compacted_through"] = old["compacted_through"]
-        self._write_pointer(name, payload)
-
-    def has_segment(self, name: str, segment_id: int) -> bool:
-        """True iff ``segment_id`` was committed (directly, or subsumed by
-        a later compaction) — the streaming sink's epoch-replay guard."""
-        p = self._read_pointer(name)
-        if p is None:
-            return False
-        sid = int(segment_id)
-        if sid <= p.get("compacted_through", -1):
-            return True
-        return str(sid) in p.get("segments", {})
-
-    def segment_count(self, name: str) -> int:
-        p = self._read_pointer(name) or {}
-        return len(p.get("dirs", []))
-
-    def append(self, name: str, df: DataFrame) -> None:
-        """Append sink (reference S8, INSERT...SELECT)."""
-        d = self._current_dir(name)
-        if d is None:
-            self.overwrite(name, df)
-        else:
-            df.write.mode("append").parquet(d)
+        return self._commit(name, df, append=True, txn=txn)
 
     def write_bucketed(
         self,
@@ -178,9 +195,9 @@ class TableCatalog:
 
     def write_partitioned(
         self, name: str, df: DataFrame, partition_cols: list[str]
-    ) -> None:
-        """Hive-style partitioned table (dt=.../ directories) with the same
-        versioned-pointer atomicity as ``overwrite``.
+    ) -> int:
+        """Hive-style partitioned table (dt=.../ directories), committed
+        like ``overwrite``.
 
         Partition pruning is the cluster-scale form of the reference's
         driver-side file skipping (S5/transaction.py:51 — don't read files
@@ -191,13 +208,11 @@ class TableCatalog:
         ≥1 file per value; a high-cardinality partition key degenerates
         into millions of tiny files and kills the scan.
         """
-        new_dir = os.path.join(self.root, f"{name}_v{self._next_version(name)}")
-        df.write.mode("overwrite").partitionBy(*partition_cols).parquet(new_dir)
-        self._write_pointer(name, {"dir": new_dir})
+        return self._commit(name, df, partition_cols=partition_cols)
 
     def write_sorted(
         self, name: str, df: DataFrame, sort_cols: list[str], n_files: int
-    ) -> None:
+    ) -> int:
         """Range-partitioned, sorted-within-file layout (data clustering).
 
         ``repartitionByRange`` gives each output file a DISJOINT value
@@ -212,7 +227,7 @@ class TableCatalog:
         coarse keys; sorted layout prunes by stats on continuous ones
         (timestamps, prices) where per-value directories are infeasible.
         """
-        self.overwrite(
+        return self.overwrite(
             name,
             df.repartitionByRange(n_files, *sort_cols).sortWithinPartitions(
                 *sort_cols
@@ -225,16 +240,16 @@ class TableCatalog:
         target_file_bytes: int = 128 * 1024 * 1024,
         cluster_by: list[str] | None = None,
     ) -> int:
-        """Rewrite a table into ~target-sized files; returns the new file
-        count.
+        """Rewrite a table into ~target-sized files in one directory;
+        returns the new file count.
 
-        Append sinks (S8) and streaming sinks accrete small files; at scale
-        a scan's task count — and the namenode's metadata load — is
-        file-bound, so periodic compaction is standing maintenance for any
-        append table. Sizing uses the CURRENT on-disk bytes (true post-
-        compression size), not row counts; the rewrite reuses the
-        versioned-pointer swap, so readers see either the old or the new
-        layout, never a mix.
+        Append sinks (S8) and streaming sinks accrete small files and one
+        directory per append; at scale a scan's task count — and the
+        namenode's metadata load — is file-bound, so periodic compaction
+        is standing maintenance for any append table. Sizing uses the
+        CURRENT on-disk bytes (true post-compression size), not row
+        counts. The rewrite is an ``overwrite`` (committed ``txns``
+        carry forward), so readers see either the old or the new layout.
 
         ``cluster_by`` re-CLUSTERS while compacting (the OPTIMIZE ...
         ZORDER BY maintenance verb): files get disjoint sort-key ranges
@@ -243,88 +258,65 @@ class TableCatalog:
         appends erode — pass a Z-order key (operators/zorder.py) to
         cluster on two dimensions at once.
         """
-        ds = self._current_dirs(name)
-        if ds is None:
-            raise FileNotFoundError(f"table {name} not initialized under {self.root}")
-        total = sum(
-            os.path.getsize(os.path.join(dirpath, f))
-            for d in ds
-            for dirpath, _, files in os.walk(d)
-            for f in files
-            if f.endswith(".parquet")
-        )
-        n_files = max(1, -(-total // int(target_file_bytes)))
         cur = self.read(name)
+        total = sum(os.path.getsize(f) for f in _parquet_files(self._current_dirs(name)))
+        n_files = max(1, -(-total // int(target_file_bytes)))
         if cluster_by:
-            self.overwrite(
-                name,
-                cur.repartitionByRange(n_files, *cluster_by)
-                .sortWithinPartitions(*cluster_by),
-            )
-            new_dir = self._current_dir(name)
-            return sum(
-                1
-                for dirpath, _, files in os.walk(new_dir)
-                for f in files
-                if f.endswith(".parquet")
-            )
-        self.overwrite(name, cur.repartition(n_files))
-        new_dir = self._current_dir(name)
-        return sum(
-            1
-            for dirpath, _, files in os.walk(new_dir)
-            for f in files
-            if f.endswith(".parquet")
-        )
+            cur = cur.repartitionByRange(n_files, *cluster_by).sortWithinPartitions(*cluster_by)
+        else:
+            cur = cur.repartition(n_files)
+        self.overwrite(name, cur)
+        return len(_parquet_files(self._current_dirs(name)))
 
     def versions(self, name: str) -> list[int]:
-        """All retained version numbers of a table, oldest first.
+        """Every retained committed version of a table, oldest first —
+        one per commit, appends included."""
+        out = {
+            v for v, d in self._version_dirs(name).items()
+            if os.path.exists(os.path.join(d, MANIFEST))
+        }
+        live = self._read_pointer(name)
+        if live:
+            out.add(live["version"])
+        return sorted(out)
 
-        ``overwrite``/``compact`` never delete prior version directories —
-        each rewrite is a full snapshot, so history is retained for free.
-        """
-        import re
-
-        pat = re.compile(rf"^{re.escape(name)}_v(\d+)$")
-        out = sorted(
-            int(m.group(1))
-            for d in os.listdir(self.root)
-            if (m := pat.match(d)) and os.path.isdir(os.path.join(self.root, d))
-        )
-        return out
+    def _manifest(self, name: str, version: int) -> dict:
+        live = self._read_pointer(name)
+        if live and live["version"] == version:
+            return live
+        path = os.path.join(self._dir(name, version), MANIFEST)
+        if not os.path.exists(path):
+            raise FileNotFoundError(
+                f"table {name} has no version {version}; have {self.versions(name)}"
+            )
+        with open(path) as fh:
+            return json.load(fh)
 
     def read_version(self, name: str, version: int) -> DataFrame:
-        """Time travel: read a specific retained snapshot of a table.
+        """Time travel: read a table as a retained commit left it.
 
         The lakehouse pattern in miniature — an auditor re-runs last
         week's fraud report against the dimension table AS IT WAS, without
         restoring backups. (SCD2 gives row-level history inside a version;
-        this gives table-level history across rewrites.)
+        this gives table-level history across commits.)
         """
-        d = os.path.join(self.root, f"{name}_v{version}")
-        if not os.path.isdir(d):
-            raise FileNotFoundError(
-                f"table {name} has no version {version}; have {self.versions(name)}"
-            )
-        return self.spark.read.parquet(d)
+        return self.spark.read.parquet(*self._manifest(name, version)["dirs"])
 
     def vacuum(self, name: str, keep_last: int = 2) -> list[int]:
-        """Drop all but the newest ``keep_last`` version directories;
-        returns the dropped version numbers. The live pointer target is
-        never dropped. Retention is the storage-cost counterweight to
-        ``read_version`` — history is snapshots, so old versions cost
-        full-table storage until vacuumed."""
-        import shutil
-
+        """Delete every ``{name}_v{N}`` directory that the newest
+        ``keep_last`` manifests do not reference (older snapshots and
+        orphans of crashed commits); returns the deleted version numbers.
+        Retention is the storage-cost counterweight to ``read_version``.
+        Like every write, it assumes no other writer is mid-commit."""
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
-        live = set(self._current_dirs(name) or [])
-        vs = self.versions(name)
+        keep = {
+            os.path.basename(d) for v in self.versions(name)[-keep_last:]
+            for d in self._manifest(name, v)["dirs"]
+        }
         dropped = []
-        for v in vs[:-keep_last] if keep_last < len(vs) else []:
-            d = os.path.join(self.root, f"{name}_v{v}")
-            if d in live:
-                continue
-            shutil.rmtree(d)
-            dropped.append(v)
+        for v, d in sorted(self._version_dirs(name).items()):
+            if os.path.basename(d) not in keep:
+                shutil.rmtree(d)
+                dropped.append(v)
         return dropped

@@ -5,16 +5,15 @@ The batch operators already split the problem the right way
 (operators/dedup.py): ``lsh_band_index`` is the STORED state,
 ``lsh_probe_pairs`` is the per-batch increment that never re-reads the
 corpus. Streaming composition is then mechanical — ``foreachBatch``
-probes the current index and commits the epoch's NEW rows as one
-append-only log segment per table (``TableCatalog.append_segment``):
-the index gains only the batch's bands, the pairs table only the
-batch's pairs. Per-epoch write volume is therefore O(batch), not
-O(corpus) — the previous design unioned fresh bands into the stored
-index and rewrote both whole tables through the catalog pointer swap
-every trigger, an O(corpus) write per epoch that dominates everything
-at 100 TB. Readers see the union of committed segments through
-``catalog.read``; periodic ``catalog.compact`` folds the log back to
-few large files (guide §6: write only new data, compact rarely).
+probes the current index and appends the epoch's NEW rows to each table
+as one catalog commit (``TableCatalog.append``): the index gains only the
+batch's bands, the pairs table only the batch's pairs. Per-epoch write
+volume is therefore O(batch), not O(corpus): unioning fresh bands into
+the stored index and rewriting both whole tables every trigger is an
+O(corpus) write per epoch that dominates everything at 100 TB. Readers
+see the union of committed appends through ``catalog.read``; periodic
+``catalog.compact`` folds them back to few large files (guide §6: write
+only new data, compact rarely).
 
 Because bucket collision is pairwise (no transitivity), batch-at-a-time
 probing surfaces EXACTLY the pairs a full-corpus recompute would (the
@@ -27,11 +26,14 @@ Exactly-once under replay (a crash between the sink write and the
 checkpoint commit makes Spark re-run the epoch with the same data and
 the same epoch id):
 
-* Each segment commit is idempotent: segment directories are keyed by
-  epoch id, rewritten in place with deterministic content, and made
-  visible by one atomic pointer swap — so a replayed epoch re-commits
-  byte-equivalent state, and ``has_segment`` short-circuits epochs that
-  already committed fully.
+* Each append is idempotent per ``(query id, epoch id)``: the catalog
+  records the last epoch each writer committed in the table's manifest,
+  in the same atomic pointer swap that makes the rows visible, and skips
+  an append whose epoch is already recorded. The writer is the streaming
+  query's persistent ``id`` from ``<checkpoint>/metadata``: a restart
+  from the same checkpoint replays under the same writer, while a fresh
+  checkpoint (even at the same path) is a new writer whose epochs start
+  again at 0 and all land.
 * First write wins per document: already-indexed doc ids are anti-joined
   out of the batch BEFORE banding, so a re-delivered (or replayed) doc
   can neither duplicate its band rows nor re-derive its pairs. Every
@@ -43,7 +45,9 @@ the same epoch id):
   "pairs committed, index not", where the batch is still un-indexed, so
   the rerun recomputes identical bands and completes the index commit.
   (The reverse order would replay into an already-indexed batch whose
-  recomputed pair segment is empty — losing the crashed epoch's pairs.)
+  recomputed pairs are empty — losing the crashed epoch's pairs.) An
+  epoch with no new rows for a table commits nothing there; its replay
+  recomputes the same empty set.
 
 tests/test_streaming.py::test_neardup_stream_replayed_epoch_is_idempotent
 forces the replay by deleting the checkpoint's last commit marker and
@@ -52,6 +56,9 @@ full-corpus run exactly.
 """
 
 from __future__ import annotations
+
+import json
+import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -67,18 +74,17 @@ INDEX_TABLE = "lsh_band_index"
 PAIRS_TABLE = "neardup_pairs"
 
 
-def neardup_sink(catalog: TableCatalog, text_col: str, id_col: str):
-    """Build the ``foreachBatch`` function: probe, then append the
-    epoch's new bands and pairs as O(batch) log segments."""
+def neardup_sink(catalog: TableCatalog, text_col: str, id_col: str, checkpoint: str):
+    """Build the ``foreachBatch`` function of the streaming query whose
+    checkpoint directory is ``checkpoint`` (a local path, like the
+    catalog root): probe, then append the epoch's new bands and pairs,
+    each an O(batch) idempotent commit."""
 
     def apply(batch: DataFrame, epoch_id: int) -> None:
         if batch.isEmpty():
             return
-        eid = int(epoch_id)
-        pairs_done = catalog.has_segment(PAIRS_TABLE, eid)
-        index_done = catalog.has_segment(INDEX_TABLE, eid)
-        if pairs_done and index_done:
-            return  # fully-committed epoch replayed: nothing to redo
+        with open(os.path.join(checkpoint, "metadata")) as fh:
+            txn = (json.load(fh)["id"], int(epoch_id))
         if catalog.exists(INDEX_TABLE):
             index = catalog.read(INDEX_TABLE)
             # first-write-wins: drop already-indexed docs before banding
@@ -94,11 +100,8 @@ def neardup_sink(catalog: TableCatalog, text_col: str, id_col: str):
         try:
             # pairs BEFORE index (see module docstring: the reverse order
             # loses a crashed epoch's pairs on replay)
-            if not pairs_done:
-                catalog.append_segment(
-                    PAIRS_TABLE, pairs.select("doc_a", "doc_b"), eid
-                )
-            catalog.append_segment(INDEX_TABLE, fresh_bands, eid)
+            catalog.append(PAIRS_TABLE, pairs.select("doc_a", "doc_b"), txn=txn)
+            catalog.append(INDEX_TABLE, fresh_bands, txn=txn)
         finally:
             fresh_bands.unpersist()
 
@@ -115,7 +118,9 @@ def run_neardup_stream(
     """Attach the near-dup sink to a document stream and process all
     available data (one probe + index extension per micro-batch)."""
     return (
-        stream.writeStream.foreachBatch(neardup_sink(catalog, text_col, id_col))
+        stream.writeStream.foreachBatch(
+            neardup_sink(catalog, text_col, id_col, checkpoint)
+        )
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()

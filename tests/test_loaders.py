@@ -82,15 +82,18 @@ def test_catalog_compaction_merges_small_files(spark, tmp_path):
             "ev",
             spark.range(batch * 100, (batch + 1) * 100).repartition(8),
         )
-    before_dir = cat._current_dir("ev")
-    n_before = sum(1 for f in os.listdir(before_dir) if f.endswith(".parquet"))
+    before_dirs = cat._current_dirs("ev")
+    n_before = sum(
+        1 for d in before_dirs for f in os.listdir(d) if f.endswith(".parquet")
+    )
     assert n_before >= 20  # genuinely fragmented
 
     n_after = cat.compact("ev", target_file_bytes=64 * 1024)
     assert n_after < n_before
     got = sorted(r["id"] for r in cat.read("ev").collect())
     assert got == list(range(500))
-    assert cat._current_dir("ev") != before_dir  # swapped, not in-place
+    (after_dir,) = cat._current_dirs("ev")
+    assert after_dir not in before_dirs  # swapped, not in-place
 
 
 def test_catalog_time_travel_and_vacuum(spark, tmp_path):
@@ -525,7 +528,8 @@ def test_compaction_with_clustering_restores_skipping(spark, tmp_path):
     n_after = cat.compact("ev", target_file_bytes=2 * 1024, cluster_by=["id"])
     assert n_after >= 2  # multiple files, so disjointness is non-vacuous
 
-    files = sorted(g.glob(str(cat._current_dir("ev")) + "/*.parquet"))
+    (live,) = cat._current_dirs("ev")
+    files = sorted(g.glob(live + "/*.parquet"))
     ranges = []
     for f in files:
         md = pq.ParquetFile(f).metadata
@@ -567,15 +571,16 @@ def test_catalog_compaction_stress_200_files(spark, tmp_path):
     for _ in range(3):
         cat.append("ev", df.repartition(50))
 
-    live = cat._current_dir("ev")
+    live = cat._current_dirs("ev")
     n_before = sum(
-        1 for f in os.listdir(live) if f.endswith(".parquet")
+        1 for d in live for f in os.listdir(d) if f.endswith(".parquet")
     )
     assert n_before == 200
 
     total_bytes = sum(
-        os.path.getsize(os.path.join(live, f))
-        for f in os.listdir(live)
+        os.path.getsize(os.path.join(d, f))
+        for d in live
+        for f in os.listdir(d)
         if f.endswith(".parquet")
     )
     target = 1024 * 1024
@@ -589,15 +594,15 @@ def test_catalog_compaction_stress_200_files(spark, tmp_path):
 
     # version pruning: the scan must list files ONLY from the live
     # (post-compaction) version directory — history costs readers nothing
-    live_after = cat._current_dir("ev")
-    assert live_after != live
+    (live_after,) = cat._current_dirs("ev")
+    assert live_after not in live
     scanned = cat.read("ev").inputFiles()
-    assert scanned and all(live_after in f for f in scanned)
-    assert not any(live in f for f in scanned)
+    assert scanned and all(live_after + "/" in f for f in scanned)
+    assert not any(d + "/" in f for d in live for f in scanned)
 
-    # vacuum drops the stale 200-file snapshot; live read unaffected
+    # vacuum drops the stale 200-file snapshots; live read unaffected
     versions = cat.versions("ev")
-    assert len(versions) == 2
+    assert len(versions) == 5  # one per append, one for the compaction
     dropped = cat.vacuum("ev", keep_last=1)
     assert dropped == versions[:-1]
     assert cat.read("ev").count() == 80_000
@@ -605,43 +610,130 @@ def test_catalog_compaction_stress_200_files(spark, tmp_path):
         cat.read_version("ev", dropped[0])
 
 
+
+
 def test_catalog_append_segment_log(spark, tmp_path):
-    """Segment-log tables: O(segment) writes with one atomic pointer
-    swap each, union reads, idempotent per-segment replay, and
+    """Append log tables: one directory and one atomic pointer swap per
+    append, union reads, idempotent replay per ``(writer, seq)`` txn, and
     compaction that folds the log while still acknowledging committed
-    segment ids (the streaming epoch-replay guard)."""
+    sequence numbers (the streaming epoch-replay guard)."""
     from etl_process_spark.sources.tables import TableCatalog
 
     cat = TableCatalog(spark, str(tmp_path / "log_cat"))
+
+    def ids():
+        return sorted(r["id"] for r in cat.read("t").collect())
+
+    def acked(seq):
+        """A replay of ``seq`` commits nothing."""
+        before = cat._current_dirs("t"), ids()
+        n = cat.append("t", spark.range(100, 103).toDF("id"), txn=("w", seq))
+        return n == 0 and (cat._current_dirs("t"), ids()) == before
+
     assert not cat.exists("t")
-    assert not cat.has_segment("t", 0)
 
-    cat.append_segment("t", spark.range(0, 5).toDF("id"), 0)
-    cat.append_segment("t", spark.range(5, 8).toDF("id"), 1)
+    assert cat.append("t", spark.range(0, 5).toDF("id"), txn=("w", 0)) == 5
+    assert cat.append("t", spark.range(5, 8).toDF("id"), txn=("w", 1)) == 3
     assert cat.exists("t")
-    assert cat.segment_count("t") == 2
-    assert cat.has_segment("t", 0) and cat.has_segment("t", 1)
-    assert not cat.has_segment("t", 2)
-    assert sorted(r["id"] for r in cat.read("t").collect()) == list(range(8))
+    assert len(cat._current_dirs("t")) == 2
+    assert ids() == list(range(8))
 
-    # replaying a segment id overwrites in place — no duplicate rows
-    cat.append_segment("t", spark.range(5, 8).toDF("id"), 1)
-    assert cat.segment_count("t") == 2
-    assert sorted(r["id"] for r in cat.read("t").collect()) == list(range(8))
+    # replaying a committed seq is a no-op — no duplicate rows
+    assert acked(0) and acked(1)
 
-    # compaction: one directory, same rows, committed ids still acked
+    # compaction: one directory, same rows, committed seqs still acked
     cat.compact("t")
     assert len(cat._current_dirs("t")) == 1
-    assert cat.has_segment("t", 0) and cat.has_segment("t", 1)
-    assert not cat.has_segment("t", 2)
-    assert sorted(r["id"] for r in cat.read("t").collect()) == list(range(8))
+    assert ids() == list(range(8))
+    assert acked(0) and acked(1)
 
     # the log keeps growing after compaction; reads union old + new
-    cat.append_segment("t", spark.range(8, 10).toDF("id"), 2)
-    assert cat.has_segment("t", 2)
-    assert sorted(r["id"] for r in cat.read("t").collect()) == list(range(10))
+    assert cat.append("t", spark.range(8, 10).toDF("id"), txn=("w", 2)) == 2
+    assert ids() == list(range(10))
 
     # plain overwrite subsumes the whole log and keeps acking history
     cat.overwrite("t", spark.range(0, 3).toDF("id"))
-    assert cat.has_segment("t", 2) and cat.has_segment("t", 0)
+    assert acked(2) and acked(0)
+    assert ids() == [0, 1, 2]
+
+    # another writer's sequence numbers are its own
+    assert cat.append("t", spark.range(3, 4).toDF("id"), txn=("other", 0)) == 1
+    assert ids() == [0, 1, 2, 3]
+
+
+@pytest.mark.parametrize("write", ["overwrite", "append", "txn_append"])
+def test_catalog_crash_before_pointer_swap_leaves_old_table(spark, tmp_path, monkeypatch, write):
+    """A crash between the data write and the pointer swap leaves the
+    table as the last commit left it, whatever the write; the half-written
+    directory is an orphan that vacuum removes, and a crashed txn append
+    is not recorded, so its retry lands."""
+    from etl_process_spark.sources.tables import TableCatalog
+
+    root = str(tmp_path / "wh")
+    cat = TableCatalog(spark, root)
+    cat.overwrite("t", spark.range(0, 3))
+    live = cat._current_dirs("t")
+    new_rows = spark.range(10, 20)
+
+    def commit():
+        if write == "overwrite":
+            return cat.overwrite("t", new_rows)
+        return cat.append("t", new_rows, txn=("w", 0) if write == "txn_append" else None)
+
+    def crash(self, name, manifest):
+        raise RuntimeError("crash before the swap")
+
+    with monkeypatch.context() as m:
+        m.setattr(TableCatalog, "_write_pointer", crash)
+        with pytest.raises(RuntimeError, match="crash before the swap"):
+            commit()
+
     assert sorted(r["id"] for r in cat.read("t").collect()) == [0, 1, 2]
+    assert cat._current_dirs("t") == live
+    assert sorted(e for e in os.listdir(root) if e.startswith("t_")) == ["t_v0", "t_v1"]
+    assert cat.vacuum("t", keep_last=1) == [1]
+    assert sorted(e for e in os.listdir(root) if e.startswith("t_")) == ["t_v0"]
+
+    assert commit() == 10
+    want = list(range(10, 20)) if write == "overwrite" else [0, 1, 2, *range(10, 20)]
+    assert sorted(r["id"] for r in cat.read("t").collect()) == want
+
+
+def test_catalog_read_version_of_appended_table_is_stable(spark, tmp_path):
+    """Every append is its own version: time travel to it returns the
+    same rows before and after later appends."""
+    from etl_process_spark.sources.tables import TableCatalog
+
+    cat = TableCatalog(spark, str(tmp_path / "wh"))
+    cat.append("t", spark.range(0, 3))
+    cat.append("t", spark.range(3, 5))
+    v = cat.versions("t")[-1]
+
+    def rows(version):
+        return sorted(r["id"] for r in cat.read_version("t", version).collect())
+
+    assert rows(v) == list(range(5))
+    cat.append("t", spark.range(5, 9))
+    assert rows(v) == list(range(5))
+    assert cat.versions("t") == [0, 1, 2]
+    assert rows(0) == [0, 1, 2]
+    assert sorted(r["id"] for r in cat.read("t").collect()) == list(range(9))
+
+
+def test_catalog_vacuum_after_compacting_appends_leaves_only_live_dirs(spark, tmp_path):
+    """Compaction folds an append log into one directory; vacuum then
+    deletes every other directory of the table (no orphaned per-append
+    directories), and the committed txns survive both."""
+    from etl_process_spark.sources.tables import TableCatalog
+
+    root = str(tmp_path / "wh")
+    cat = TableCatalog(spark, root)
+    for seq in range(3):
+        cat.append("t", spark.range(seq * 10, seq * 10 + 10), txn=("w", seq))
+    cat.compact("t")
+    cat.vacuum("t", keep_last=1)
+
+    (live,) = cat._current_dirs("t")
+    assert [os.path.join(root, e) for e in os.listdir(root) if e.startswith("t_")] == [live]
+    assert sorted(r["id"] for r in cat.read("t").collect()) == list(range(30))
+    assert cat.append("t", spark.range(99, 100), txn=("w", 2)) == 0

@@ -557,7 +557,7 @@ def test_catalog_append_with_schema_evolution(spark, tmp_path):
     )
     cat.append("dim", v2)
     merged = spark.read.option("mergeSchema", "true").parquet(
-        cat._current_dir("dim")
+        *cat._current_dirs("dim")
     )
     assert set(merged.columns) == {"id", "name", "note"}
     rows = {r["id"]: r["note"] for r in merged.collect()}

@@ -355,3 +355,28 @@ def test_empty_fact_rerun_writes_no_report_files(spark, dims, tmp_path):
     files = _table_files(wh, "rep_fraud")
     assert run(3).report_rows == 0
     assert files and _table_files(wh, "rep_fraud") == files
+
+
+def test_night_without_new_events_leaves_report_files_unchanged(spark, dims, tmp_path):
+    """A night that appends facts but derives no new fraud events commits
+    nothing to rep_fraud: an empty append writes no file."""
+    inbox = tmp_path / "inbox"
+    inbox.mkdir()
+    wh = str(tmp_path / "wh")
+    _write_day1(inbox)
+    run_daily_batch(
+        spark, inbox_dir=str(inbox), warehouse_dir=wh, dims=dims,
+        clock=dt.datetime(2024, 3, 2, 1, 17), archive=False,
+    )
+    files = _table_files(wh, "rep_fraud")
+    (inbox / "transactions_02032024.txt").write_text(
+        TX_HEADER
+        + "T010;2024-03-02 12:00:00;10,00;CARD1               ;PAYMENT;SUCCESS;A1\n"
+    )
+    r = run_daily_batch(
+        spark, inbox_dir=str(inbox), warehouse_dir=wh, dims=dims,
+        clock=CLOCK, archive=False,
+    )
+    assert r.transactions_appended == 1
+    assert r.report_rows == 0
+    assert files and _table_files(wh, "rep_fraud") == files

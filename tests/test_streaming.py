@@ -1266,6 +1266,20 @@ def _staged_inbox(tmp_path, frames, name):
     return inbox, files
 
 
+def _query_id(ckpt) -> str:
+    """The streaming query's persistent id, as its checkpoint stores it."""
+    import json
+    import os
+
+    with open(os.path.join(ckpt, "metadata")) as fh:
+        return json.load(fh)["id"]
+
+
+def _txns(cat, table) -> dict:
+    """Writer id -> last committed sequence number, from the live manifest."""
+    return cat._read_pointer(table)["txns"]
+
+
 def test_scd2_stream_replayed_epoch_is_idempotent(spark, event_inbox, tmp_path):
     """Streaming SCD2 across a kill + forced replay of the last epoch:
     the replayed micro-batch re-merges rows whose versions already
@@ -1387,6 +1401,68 @@ def test_neardup_stream_replayed_epoch_is_idempotent(spark, tmp_path):
     assert any(b >= 10_000 for _, b in got)
 
 
+def test_neardup_stream_fresh_checkpoint_lands_every_batch(spark, tmp_path):
+    """Wipe the near-dup stream's checkpoint and stream new files under a
+    fresh one at the same path: the new query is a new writer whose epoch
+    ids restart at 0, and every one of its batches must land (a replay
+    guard keyed by bare epoch id drops them as already committed)."""
+    import shutil
+
+    from pyspark.sql import types as T
+
+    from etl_process_spark.operators.dedup import lsh_bands, lsh_candidate_pairs
+    from etl_process_spark.sources.tables import TableCatalog
+    from etl_process_spark.streaming.dedup_stream import (
+        INDEX_TABLE,
+        PAIRS_TABLE,
+        run_neardup_stream,
+    )
+    from etl_process_spark.streaming.sources import read_event_stream
+
+    docs = tbl(spark, SF_DIR, "documents").select("doc_id", "text")
+    clones = docs.filter(F.col("doc_id") < 4).select(
+        (F.col("doc_id") + 10_000).alias("doc_id"), "text"
+    )
+    all_docs = docs.unionByName(clones).cache()
+    chunks = [all_docs.filter(F.col("doc_id") % 3 == i) for i in range(3)]
+    inbox, files = _staged_inbox(tmp_path, chunks, "freshdocs")
+    schema = T.StructType([
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("text", T.StringType()),
+    ])
+    cat = TableCatalog(spark, str(tmp_path / "fresh_cat"))
+    ckpt = str(tmp_path / "fresh_ckpt")
+
+    def run(batch_files):
+        for f in inbox.iterdir():
+            f.unlink()
+        for f in batch_files:
+            shutil.copy2(f, inbox / f.name)
+        stream = read_event_stream(
+            spark, str(inbox), max_files_per_trigger=1, schema=schema
+        )
+        run_neardup_stream(stream, cat, "text", "doc_id", ckpt).awaitTermination(300)
+        return _query_id(ckpt)
+
+    first = run(files[:2])  # epochs 0, 1
+    shutil.rmtree(ckpt)
+    second = run(files[2:])  # epoch 0 again, of a new query
+    assert second != first
+
+    index = cat.read(INDEX_TABLE)
+    assert index.count() == index.distinct().count()
+    assert _canon(index, ["doc", "band", "bucket"]) == _canon(
+        lsh_bands(all_docs, "text", "doc_id"), ["doc", "band", "bucket"]
+    )
+    got = {(r["doc_a"], r["doc_b"]) for r in cat.read(PAIRS_TABLE).collect()}
+    expected = {
+        (r["doc_a"], r["doc_b"])
+        for r in lsh_candidate_pairs(all_docs, "text", "doc_id").collect()
+    }
+    assert got == expected
+    assert _txns(cat, INDEX_TABLE) == {first: 1, second: 0}
+
+
 def test_trending_stream_replayed_epoch_is_idempotent(spark, event_inbox, tmp_path):
     """Trending top-k across a kill + forced replay: the per-epoch
     OVERWRITE sink rewrites the replayed epoch's directory instead of
@@ -1478,17 +1554,16 @@ def test_neardup_stream_write_volume_is_per_batch(spark, tmp_path):
     stream = read_event_stream(
         spark, str(inbox), max_files_per_trigger=1, schema=schema
     )
-    q = run_neardup_stream(
-        stream, cat, "text", "doc_id", str(tmp_path / "vol_ckpt")
-    )
+    ckpt = str(tmp_path / "vol_ckpt")
+    q = run_neardup_stream(stream, cat, "text", "doc_id", ckpt)
     q.awaitTermination(300)
 
-    # one committed segment per non-empty epoch, for both tables
-    assert cat.segment_count(INDEX_TABLE) == 3
-    assert cat.segment_count(PAIRS_TABLE) == 3
-    for e in range(3):
-        assert cat.has_segment(INDEX_TABLE, e)
-        assert cat.has_segment(PAIRS_TABLE, e)
+    # one committed append per non-empty epoch, for both tables
+    assert len(cat._current_dirs(INDEX_TABLE)) == 3
+    assert len(cat._current_dirs(PAIRS_TABLE)) == 3
+    qid = _query_id(ckpt)
+    assert _txns(cat, INDEX_TABLE) == {qid: 2}
+    assert _txns(cat, PAIRS_TABLE) == {qid: 2}
 
     # every band row written exactly once: per-segment rows sum to the
     # final table (an O(corpus)-rewrite design re-writes earlier epochs'
@@ -1505,16 +1580,20 @@ def test_neardup_stream_write_volume_is_per_batch(spark, tmp_path):
     assert pair_seg_rows == cat.read(PAIRS_TABLE).count()
     assert cat.read(PAIRS_TABLE).count() == cat.read(PAIRS_TABLE).distinct().count()
 
-    # no O(corpus) version rewrites happened alongside the segments
-    assert cat.versions(INDEX_TABLE) == []
-    assert cat.versions(PAIRS_TABLE) == []
+    # no O(corpus) rewrites happened alongside the appends: each version
+    # directory holds only its epoch's rows (epoch i streamed chunk i)
+    assert cat.versions(INDEX_TABLE) == [0, 1, 2]
+    for i, d in enumerate(cat._current_dirs(INDEX_TABLE)):
+        chunks_in_dir = {
+            r["doc"] % 3 for r in spark.read.parquet(d).select("doc").distinct().collect()
+        }
+        assert chunks_in_dir == {i}
 
-    # compaction folds the log to one dir and still answers has_segment
-    # (the replay guard) for all committed epochs
+    # compaction folds the log to one dir and still acknowledges every
+    # committed epoch (the replay guard)
     cat.compact(INDEX_TABLE)
     assert len(cat._current_dirs(INDEX_TABLE)) == 1
-    for e in range(3):
-        assert cat.has_segment(INDEX_TABLE, e)
+    assert _txns(cat, INDEX_TABLE) == {qid: 2}
     assert seg_rows == cat.read(INDEX_TABLE).count()
 
     # the streamed state equals a fresh full-corpus banding
@@ -1557,13 +1636,17 @@ def test_neardup_sink_replay_after_partial_epoch_commit(spark, tmp_path):
     class CrashAfterPairsCommit(TableCatalog):
         armed = False
 
-        def append_segment(self, name, df, segment_id):
-            super().append_segment(name, df, segment_id)
+        def append(self, name, df, txn=None):
+            n = super().append(name, df, txn=txn)
             if self.armed and name == PAIRS_TABLE:
                 raise RuntimeError("injected crash after pairs commit")
+            return n
 
     cat = CrashAfterPairsCommit(spark, str(tmp_path / "crash_cat"))
-    sink = neardup_sink(cat, "text", "doc_id")
+    ckpt = tmp_path / "crash_ckpt"
+    ckpt.mkdir()
+    (ckpt / "metadata").write_text('{"id":"q1"}')  # the query id Spark would store
+    sink = neardup_sink(cat, "text", "doc_id", str(ckpt))
     sink(batch0, 0)
 
     cat.armed = True
@@ -1572,14 +1655,14 @@ def test_neardup_sink_replay_after_partial_epoch_commit(spark, tmp_path):
         raise AssertionError("injected crash did not fire")
     except RuntimeError:
         pass
-    # crashed mid-epoch: pairs segment 1 committed, index segment 1 not
-    assert cat.has_segment(PAIRS_TABLE, 1)
-    assert not cat.has_segment(INDEX_TABLE, 1)
+    # crashed mid-epoch: pairs epoch 1 committed, index epoch 1 not
+    assert _txns(cat, PAIRS_TABLE) == {"q1": 1}
+    assert _txns(cat, INDEX_TABLE) == {"q1": 0}
 
     cat.armed = False
     sink(batch1, 1)  # replay of the same epoch
 
-    assert cat.has_segment(INDEX_TABLE, 1)
+    assert _txns(cat, INDEX_TABLE) == {"q1": 1}
     index = cat.read(INDEX_TABLE)
     assert index.count() == index.distinct().count()
     assert _canon(index, ["doc", "band", "bucket"]) == _canon(
@@ -1593,6 +1676,6 @@ def test_neardup_sink_replay_after_partial_epoch_commit(spark, tmp_path):
     assert got == expected
 
     # and a full replay of an already-complete epoch is a strict no-op
-    before = cat.segment_count(INDEX_TABLE), cat.segment_count(PAIRS_TABLE)
+    before = cat._current_dirs(INDEX_TABLE), cat._current_dirs(PAIRS_TABLE)
     sink(batch1, 1)
-    assert (cat.segment_count(INDEX_TABLE), cat.segment_count(PAIRS_TABLE)) == before
+    assert (cat._current_dirs(INDEX_TABLE), cat._current_dirs(PAIRS_TABLE)) == before
